@@ -826,10 +826,11 @@ object TextKernel {
     *     i -> concat_ws(" ", slice(toks, i + 1, w))))
     * over toks = split(lower(trim(text)), "\\s+"). Replicates Spark's
     * composition exactly (OpsSpec pin): trim strips 0x20 only; lower is
-    * UTF8String.toLowerCase; regex-\s+ split emits a LEADING empty token
-    * when the trimmed text starts with non-space whitespace, keeps
-    * interior empties never (maximal runs), drops trailing empties, and
-    * yields [""] for empty input — so the empty doc emits the "" gram;
+    * UTF8String.toLowerCase; regex-\s+ split (limit −1) emits a LEADING
+    * empty token when the trimmed text starts with non-space whitespace
+    * and a TRAILING one when it ends in it, keeps interior empties never
+    * (maximal runs), and yields [""] for empty input — so the empty doc
+    * emits the "" gram and "\t" splits to ["", ""];
     * the final (or only) grams truncate at the token list's end;
     * first-occurrence order. Gram strings are built once into a shared
     * byte buffer (the dag rebuilt them through three interpreted lambda
@@ -867,6 +868,7 @@ object TextKernel {
           push(st, i)
         }
       }
+      if (isWs(bytes(n - 1))) push(n, n) // trailing separator -> trailing ""
     }
     val nGrams = math.max(nTok - w, 0) + 1
     val out = new java.util.ArrayList[Any](nGrams)

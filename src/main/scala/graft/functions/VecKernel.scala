@@ -324,9 +324,13 @@ object VecKernel {
   /** Split a quantized vector into nSub contiguous subvectors (r12): the
     * native form of transform(sequence(0, nSub−1), s -> slice(qv,
     * s·subDim + 1, subDim)) — Pq.train's per-row staging, whose
-    * transform+slice pair evaluated interpreted per subvector.
+    * transform+slice pair evaluated interpreted per subvector. A vector
+    * whose length is not nSub·subDim (a ragged row) is rejected.
     */
   def subvectors(qv: ArrayData, nSub: Int, subDim: Int): ArrayData = {
+    require(qv.numElements() == nSub * subDim,
+      s"subvectors: vector length ${qv.numElements()} != nSub·subDim = " +
+        s"${nSub * subDim} ($nSub×$subDim)")
     val rows = new Array[Any](nSub)
     var s = 0
     while (s < nSub) {

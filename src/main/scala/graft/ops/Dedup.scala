@@ -188,8 +188,8 @@ object Dedup {
     //     i -> concat_ws(" ", slice(toks, i+1, w))))
     // over toks = split(lower(trim(text)), "\\s+") ran transform's lambda
     // interpreted per gram and rebuilt each gram through three expression
-    // layers. Bit-identical output incl. the leading-empty-token and
-    // empty-doc edges (OpsSpec pin); one byte pass per doc.
+    // layers. Bit-identical output incl. the leading/trailing-empty-token
+    // and empty-doc edges (OpsSpec pin); one byte pass per doc.
     graft.functions.gfn.shingle_strings(text, w)
 
   /** doc_id + 31-bit hashed w-shingles, via the native ShingleHashes

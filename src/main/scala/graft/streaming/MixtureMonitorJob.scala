@@ -1,38 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Mix
 
 /** Streaming face of DoReMi domain reweighting
-  * ([[graft.ops.Mix.doremiWeights]]): (stratum, loss) rows arrive as a
-  * stream — per-document proxy/reference-model losses scored at ingest —
-  * and every micro-batch emits the refreshed mixture table
-  * (stratum, n_docs, avg_loss, ref_loss, excess, alpha) over EVERYTHING
-  * seen so far. The live data-recipe dial: watch a domain's α rise as its
-  * excess loss accumulates, instead of waiting for the nightly rebuild.
+  * ([[graft.ops.Mix.doremiWeights]]): (stratum, loss) rows — per-document
+  * proxy/reference-model losses scored at ingest — arrive as a stream and
+  * every micro-batch emits the mixture table (stratum, n_docs, avg_loss,
+  * ref_loss, excess, alpha) over EVERYTHING seen so far: watch a domain's
+  * α rise as its excess loss accumulates, not at the nightly rebuild.
   *
-  * Why this composes exactly: the state is the G-row (stratum, n_docs, sl)
-  * cell table and exact Long sums merge across any partition of the
-  * stream, so folding per-batch cells is BIT-IDENTICAL to a one-shot
-  * build over the concatenation (StreamingSpec pins stream == batch); the
-  * exp/normalize assembly runs on the merged G rows per trigger. Same
-  * mergeable-summary contract as [[EvalMonitorJob]].
+  * Exact: the state is the G-row (stratum, n_docs, sl) cell table and
+  * exact Long sums merge across any split of the stream, so the fold is
+  * BIT-IDENTICAL to a one-shot build (StreamingSpec pins stream == batch);
+  * the exp/normalize assembly runs on the merged G rows. Each trigger pays
+  * one partial-combined aggregate over its increment plus a G-cell merge
+  * (G = domain count); the stream is never rescanned.
   *
-  * Cost model at scale: each trigger pays one partial-combined aggregate
-  * over its own increment plus a G-cell merge — the stream is never
-  * rescanned and state never grows past G cells (G = domain count).
-  *
-  * ==Restart contract==
-  * Identical to [[EvalMonitorJob]] (count merges are NOT idempotent):
-  * `cellsSink` receives `(batchId, cells)`; persist both atomically,
-  * latest-wins, and rehydrate via `initialCells`/`initialBatchId` — a
-  * replayed batch id merges as a no-op instead of double-counting.
-  *
-  * Input schema: (stratum, loss) with loss an exact integer (the
-  * doremiWeights contract). Output per trigger: the doremiFromCells table.
+  * Restart: the [[MergeMonitor]] contract (`cellsSink`, `initialCells`,
+  * `initialBatchId`). Input: (stratum, loss), loss an exact integer.
   */
 object MixtureMonitorJob {
 
@@ -44,41 +33,9 @@ object MixtureMonitorJob {
             initialCells: Option[DataFrame] = None,
             initialBatchId: Long = Long.MinValue,
             cellsSink: Option[(Long, DataFrame) => Unit] = None,
-            trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialCells // consumed by the first trigger
-    @volatile var lastMerged = initialBatchId
-    scored.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastMerged) {
-          val batchCells = Mix.lossCells(batch, col("stratum"), col("loss"))
-          val base = Option(cpRef.get()).map(_.df).orElse(init)
-          val merged = base
-            .map(st => Mix.mergeLossCells(st, batchCells))
-            .getOrElse(batchCells)
-          // G-cell state, lineage-cut per trigger; round N released the
-          // moment N+1 is stored (the Caches loop contract)
-          val next = graft.ops.Caches.checkpoint(merged)
-          val prev = cpRef.getAndSet(next)
-          if (prev != null) prev.release()
-          init = None
-          lastMerged = batchId
-        }
-        // raw state first (the EvalMonitorJob ordering rationale: offsets
-        // commit after foreachBatch returns; the id guard keeps a replay a
-        // no-op and the persisted snapshot exact under latest-wins)
-        val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-          .getOrElse(spark.range(0).select(lit("").as("stratum"),
-            lit(0L).as("n_docs"), lit(0L).as("sl")))
-        cellsSink.foreach(sink => sink(lastMerged, cur))
-        outSink(Mix.doremiFromCells(cur, eta, epsMille))
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MergeMonitor.start(scored, checkpointDir, trigger, initialCells,
+        initialBatchId, cellsSink)(
+      Mix.lossCells(_, col("stratum"), col("loss")),
+      Mix.mergeLossCells, Mix.doremiFromCells(_, eta, epsMille), outSink)
 }

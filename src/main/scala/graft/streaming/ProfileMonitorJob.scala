@@ -1,38 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Profile
 
 /** Streaming face of the column profiler
   * ([[graft.ops.Profile.columnProfile]]): rows arrive as a stream and
-  * every micro-batch emits the refreshed per-column profile (nulls,
-  * distincts, dominant value + share) over EVERYTHING seen so far — the
-  * live schema-health dashboard: watch a feed's null fraction jump or a
-  * "mode collapse" (one value swallowing the column) the trigger it
+  * every micro-batch emits the per-column profile (nulls, distincts,
+  * dominant value + share) over EVERYTHING seen so far — watch a feed's
+  * null fraction jump or one value swallow a column the trigger it
   * happens, instead of at the nightly rebuild.
   *
-  * Why this composes exactly: the state is the (column, value, m) cell
-  * table and exact Long counts merge across any partition of the stream,
-  * so folding per-batch cells is BIT-IDENTICAL to a one-shot build over
-  * the concatenation (StreamingSpec pins stream == batch); the summary
-  * assembly runs on the merged cells per trigger. Same mergeable-summary
-  * contract as [[MixtureMonitorJob]] / [[EvalMonitorJob]].
+  * Exact: the state is the (column, value, m) cell table and exact Long
+  * counts merge across any split of the stream, so the fold is
+  * BIT-IDENTICAL to a one-shot build (StreamingSpec pins stream == batch).
+  * Each trigger pays one partial-combined aggregate over its increment
+  * plus a cell merge. State is bounded by the profiled columns'
+  * CARDINALITY: a near-unique key column grows it linearly, as it would
+  * any COUNT(DISTINCT) state.
   *
-  * Cost model at scale: each trigger pays one partial-combined aggregate
-  * over its own increment plus a cell merge. State is bounded by the
-  * profiled columns' CARDINALITY — profile categorical/bounded columns
-  * (the contract of any streaming mode/distinct state); a near-unique
-  * key column would grow state linearly, exactly as it would grow any
-  * COUNT(DISTINCT) state.
-  *
-  * ==Restart contract==
-  * Identical to [[EvalMonitorJob]] (count merges are NOT idempotent):
-  * `cellsSink` receives `(batchId, cells)`; persist both atomically,
-  * latest-wins, and rehydrate via `initialCells`/`initialBatchId` — a
-  * replayed batch id merges as a no-op instead of double-counting.
+  * Restart: the [[MergeMonitor]] contract (`cellsSink`, `initialCells`,
+  * `initialBatchId`).
   */
 object ProfileMonitorJob {
 
@@ -43,41 +32,9 @@ object ProfileMonitorJob {
             initialCells: Option[DataFrame] = None,
             initialBatchId: Long = Long.MinValue,
             cellsSink: Option[(Long, DataFrame) => Unit] = None,
-            trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialCells // consumed by the first trigger
-    @volatile var lastMerged = initialBatchId
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastMerged) {
-          val batchCells = Profile.profileCells(batch, cols)
-          val base = Option(cpRef.get()).map(_.df).orElse(init)
-          val merged = base
-            .map(st => Profile.mergeProfileCells(st, batchCells))
-            .getOrElse(batchCells)
-          // cell-table state, lineage-cut per trigger; round N released
-          // the moment N+1 is stored (the Caches loop contract)
-          val next = graft.ops.Caches.checkpoint(merged)
-          val prev = cpRef.getAndSet(next)
-          if (prev != null) prev.release()
-          init = None
-          lastMerged = batchId
-        }
-        // raw state first (the EvalMonitorJob ordering rationale: offsets
-        // commit after foreachBatch returns; the id guard keeps a replay a
-        // no-op and the persisted snapshot exact under latest-wins)
-        val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-          .getOrElse(spark.range(0).select(lit("").as("column"),
-            lit("").as("v"), lit(0L).as("m")))
-        cellsSink.foreach(sink => sink(lastMerged, cur))
-        outSink(Profile.profileFromCells(cur))
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MergeMonitor.start(rows, checkpointDir, trigger, initialCells,
+        initialBatchId, cellsSink)(
+      Profile.profileCells(_, cols),
+      Profile.mergeProfileCells, Profile.profileFromCells, outSink)
 }

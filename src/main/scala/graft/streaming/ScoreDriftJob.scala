@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Eval
@@ -8,31 +9,22 @@ import graft.ops.Eval
 /** Streaming face of the distribution-drift pair
   * ([[graft.ops.Eval.psi]] + [[graft.ops.Eval.wasserstein1]]): scored
   * rows arrive as a stream — a live quality-scorer's output, an ingest
-  * feed being compared against the corpus it is supposed to resemble —
-  * and every micro-batch emits (psi, w1) of EVERYTHING seen so far
-  * against a fixed reference histogram. PSI says "bucket probabilities
-  * moved", W1 says "and this far" — the pair live, at ingest time.
+  * feed compared against the corpus it should resemble — and every
+  * micro-batch emits (psi, w1) of EVERYTHING seen so far against a fixed
+  * reference histogram. PSI says "bucket probabilities moved", W1 says
+  * "and this far".
   *
-  * Why this composes exactly: state is the ≤(edges+1)-row exact bucket
-  * count table and integer sums merge across any split of the stream
-  * ([[graft.ops.Eval.mergeBucketCounts]]), so the per-trigger fold is
-  * bit-identical to a one-shot [[graft.ops.Eval.driftFromCounts]] over
-  * the concatenated stream (StreamingSpec pins stream == batch). Each
-  * trigger pays one narrow bucket dag + partial-agg over its own
-  * increment; the stream is never rescanned and state never grows past
-  * edges+1 rows regardless of volume.
+  * Exact: the state is the ≤(edges+1)-row bucket count table and integer
+  * sums merge across any split of the stream
+  * ([[graft.ops.Eval.mergeBucketCounts]]), so the fold is BIT-IDENTICAL
+  * to a one-shot [[graft.ops.Eval.driftFromCounts]] (StreamingSpec pins
+  * stream == batch). Each trigger pays one narrow bucket dag +
+  * partial-agg over its increment; the stream is never rescanned.
   *
-  * ==Restart contract==
-  * Identical to [[EvalMonitorJob]]/[[EmbedDriftJob]] (count sums are NOT
-  * retry-idempotent): `countsSink` receives `(batchId, counts)`; persist
-  * both atomically (latest-wins), rehydrate via `initialCounts` +
-  * `initialBatchId`, and a replayed batch's merge becomes a no-op
-  * instead of a double count.
-  *
-  * Input schema: a double-castable column named by `scoreCol`.
-  * `refCounts` is the reference histogram in the [[graft.ops.Eval
-  * .bucketCounts]] schema (bucket, cnt) — typically one bucketCounts
-  * pass over the reference corpus, persisted.
+  * Restart: the [[MergeMonitor]] contract (`countsSink`,
+  * `initialCounts`, `initialBatchId`). Input: a double-castable column
+  * named by `scoreCol`; `refCounts` is the reference histogram in the
+  * [[graft.ops.Eval.bucketCounts]] schema (bucket, cnt).
   */
 object ScoreDriftJob {
 
@@ -45,39 +37,10 @@ object ScoreDriftJob {
             initialCounts: Option[DataFrame] = None,
             initialBatchId: Long = Long.MinValue,
             countsSink: Option[(Long, DataFrame) => Unit] = None,
-            trigger: Trigger = Trigger.AvailableNow())
-           (implicit spark: SparkSession): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    // foreachBatch triggers run sequentially, so plain refs are race-free
-    val cpRef =
-      new java.util.concurrent.atomic.AtomicReference[graft.ops.Caches.Checkpointed](null)
-    @volatile var init = initialCounts // consumed by the first trigger
-    @volatile var lastMerged = initialBatchId
-    scores.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastMerged) {
-          val batchCounts = Eval.bucketCounts(batch, col(scoreCol), edges)
-          val base = Option(cpRef.get()).map(_.df).orElse(init)
-          val merged = base
-            .map(st => Eval.mergeBucketCounts(st, batchCounts))
-            .getOrElse(batchCounts)
-          // ≤(edges+1)-row state, lineage-cut per trigger; round N is
-          // released the moment N+1 is stored (the Caches loop contract)
-          val next = graft.ops.Caches.checkpoint(merged)
-          val prev = cpRef.getAndSet(next)
-          if (prev != null) prev.release()
-          init = None
-          lastMerged = batchId
-        }
-        val cur: DataFrame = Option(cpRef.get()).map(_.df).orElse(init)
-          .getOrElse(spark.range(0)
-            .selectExpr("cast(0 as long) as bucket", "cast(0 as long) as cnt"))
-        countsSink.foreach(sink => sink(lastMerged, cur))
-        outSink(Eval.driftFromCounts(cur, refCounts, edges))
-        ()
-      }
-      .start()
-  }
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MergeMonitor.start(scores, checkpointDir, trigger, initialCounts,
+        initialBatchId, countsSink)(
+      Eval.bucketCounts(_, col(scoreCol), edges),
+      Eval.mergeBucketCounts, Eval.driftFromCounts(_, refCounts, edges),
+      outSink)
 }

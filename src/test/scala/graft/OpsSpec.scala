@@ -878,6 +878,14 @@ class OpsSpec extends AnyFunSuite {
     val h16 = Sessions.discountedReturns(ev, col("u"), col("o"), col("r"),
         horizon = 16).orderBy("traj_id", "ord").collect()
     assert(h16.head.getDouble(4) == 1.0 + 2.0 / 2 + 4.0 / 4 + 8.0 / 8)
+    // a null reward inside the frame nulls ret, as the collect_list fold
+    // did; a lead past the trajectory's end still adds 0
+    val withNull = Seq((3L, 1L, Option(4L)), (3L, 2L, None), (3L, 3L, Option(2L)))
+      .toDF("u", "o", "r")
+    val nullRets = Sessions.discountedReturns(withNull, col("u"), col("o"),
+        col("r"), horizon = 2)
+      .orderBy("ord").collect().map(r => Option(r.get(4)))
+    assert(nullRets.toSeq == Seq(None, None, Some(2.0)), nullRets.mkString)
     // r12 lead()-rewrite pin: bitwise replay of the original
     // collect_list + array_sort + interpreted-fold dag on corpus events
     locally {
@@ -4216,6 +4224,16 @@ class OpsSpec extends AnyFunSuite {
         d2(sliceS(q0, sub), cents(sub)(sparkCodes(id)(sub).toInt)) }.sum }
     val expectTop = adc.sortBy { case (id, d) => (d, id) }.take(5)
     assert(out.map(r => (r.getLong(2), r.getLong(3))).toSeq == expectTop)
+    // a ragged row fails with both lengths named instead of being read past
+    val ragged = (data :+ ((1000L, data.head._2.take(12)))).toDF("vec_id", "embedding")
+    val err = intercept[Exception] {
+      graft.ops.Pq.train(ragged, "vec_id", "embedding",
+        nSub = 4, k = 4, iters = 1, scale = 1000)
+    }
+    val iae = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: IllegalArgumentException => e }
+    assert(iae.exists(e => e.getMessage.contains("12") &&
+      e.getMessage.contains("16")), err.toString)
   }
 
   test("PQ ANN recall@10 vs exact L2 >= 0.5 avg on clustered vectors") {
@@ -5163,7 +5181,8 @@ class OpsSpec extends AnyFunSuite {
       (1000006L, "a  b   c d e f g"), (1000007L, "x x x x x x x x"),
       (1000008L, "Héllo wörld Héllo wörld naïve Σ"),
       (1000009L, "a" + new String(Character.toChars(0x1F4A9)) + " b c d e"),
-      (1000010L, "\tTab lead"), (1000011L, "UPPER Case MiXeD case case"))
+      (1000010L, "\tTab lead"), (1000011L, "UPPER Case MiXeD case case"),
+      (1000012L, "a b\t"), (1000013L, "x\n"), (1000014L, "\t"))
       .toDF("id", "s")
     val both = edge.unionByName(docsDf)
 

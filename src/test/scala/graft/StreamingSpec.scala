@@ -1053,4 +1053,20 @@ class StreamingSpec extends AnyFunSuite {
         r.getAs[Long]("top_freq") == 3L)
     } finally { q2.stop(); graft.ops.Caches.drainAll(spark) }
   }
+
+  test("merge monitor: initialBatchId without initial state is rejected before any batch runs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String)]
+    mem.addData(("en", "en"))
+    @volatile var emitted = 0
+    val ckpt = java.nio.file.Files.createTempDirectory("evalmon_noinit").toFile
+    intercept[IllegalArgumentException] {
+      graft.streaming.EvalMonitorJob.start(
+        mem.toDF().toDF("pred", "gold"), _ => emitted += 1, ckpt.toString,
+        initialBatchId = 3L,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    }
+    assert(emitted == 0 && ckpt.list().isEmpty, "no query may have started")
+  }
 }
